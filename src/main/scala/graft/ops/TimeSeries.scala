@@ -294,37 +294,39 @@ object TimeSeries {
   }
 
   /** Per-key ordinary-least-squares trend line over (x, y) integer
-    * observations, in closed form on exact BIGINT sums — the
+    * observations, in closed form on exact integer sums — the
     * volume-trend / drift report per series:
     *
     *   slope·10⁶ = 10⁶·(n·Σxy − Σx·Σy) div (n·Σx² − (Σx)²)
     *   r²·10⁴    = 10⁴·(n·Σxy − Σx·Σy)² div ((n·Σx²−(Σx)²)(n·Σy²−(Σy)²))
     *
-    * with r² computed divide-early — (num·10⁴ div dx)·num div dy — so
-    * no intermediate squares a BIGINT. Both engines evaluate the
-    * identical expression, so the value is bit-exact CROSS-ENGINE, but
-    * the divide-early truncation error vs true r²·10⁴ is bounded by
-    * num/dy ≤ √(dx/dy) basis points — within 1 bp only when dx ≲ dy.
-    * When the x-spread far exceeds the y-spread (near-flat series
-    * sampled over a long index range), r2_bp can UNDERSTATE true r² by
-    * up to √(dx/dy) bp: treat it as a replayable fixed-point fit
-    * statistic, not a ±1 bp estimate of r². (Callers needing tight
-    * error on flat series should rescale x into units comparable to y
-    * before calling.) ONE map-side-
-    * combinable aggregation per key (five sums + a count) — no
-    * windows, no joins. Overflow bound: num·10⁴ ≲ 9·10¹⁸ ⇒
-    * n·max\|x\|·max\|y\| ≲ 10¹⁴ (rescale units past that). Keys with
-    * < 2 points or degenerate x-variance emit NULL slope/r².
+    * with r² computed divide-early — (num·10⁴ div dx)·num div dy — on
+    * DECIMAL(38,0) sums and cross terms (HUGEINT in the oracle; n·Σx²
+    * leaves BIGINT at ~10⁴ points of magnitude 2²⁰, the pseudo-log2
+    * axes of [[TextAnalysis.zipfFit]]); `div` returns BIGINT outputs.
+    * Both engines evaluate the identical expression, so the value is
+    * bit-exact CROSS-ENGINE, but the divide-early truncation error vs
+    * true r²·10⁴ is bounded by num/dy ≤ √(dx/dy) basis points — within
+    * 1 bp only when dx ≲ dy. When the x-spread far exceeds the y-spread
+    * (near-flat series sampled over a long index range), r2_bp can
+    * UNDERSTATE true r² by up to √(dx/dy) bp: treat it as a replayable
+    * fixed-point fit statistic, not a ±1 bp estimate of r². (Callers
+    * needing tight error on flat series should rescale x into units
+    * comparable to y before calling.) ONE map-side-combinable
+    * aggregation per key (five sums + a count) — no windows, no
+    * joins. Overflow bound: num·10⁶ < 10³⁸ ⇒
+    * n·max\|x\|·max\|y\| ≲ 10³¹, and the outputs must fit a BIGINT.
+    * Keys with < 2 points or degenerate x-variance emit NULL slope/r².
     */
   def trend(
       df: DataFrame, keyCol: String, xCol: String, yCol: String
   ): DataFrame = {
+    val x = col(xCol).cast("decimal(38,0)")
+    val y = col(yCol).cast("decimal(38,0)")
     val agg = df.groupBy(col(keyCol))
       .agg(count(lit(1)).as("n"),
-        sum(col(xCol)).as("sx"), sum(col(yCol)).as("sy"),
-        sum(col(xCol) * col(yCol)).as("sxy"),
-        sum(col(xCol) * col(xCol)).as("sxx"),
-        sum(col(yCol) * col(yCol)).as("syy"))
+        sum(x).as("sx"), sum(y).as("sy"), sum(x * y).as("sxy"),
+        sum(x * x).as("sxx"), sum(y * y).as("syy"))
     agg
       .withColumn("_num", expr("n * sxy - sx * sy"))
       .withColumn("_dx", expr("n * sxx - sx * sx"))
@@ -332,8 +334,7 @@ object TimeSeries {
       .withColumn("slope_micro",
         when(col("_dx") > 0, expr("_num * 1000000 div _dx")))
       .withColumn("intercept_micro",
-        when(col("_dx") > 0,
-          expr("(sy * 1000000 - (_num * 1000000 div _dx) * sx) div n")))
+        expr("(sy * 1000000 - slope_micro * sx) div n"))
       .withColumn("r2_bp",
         when(col("_dx") > 0 && col("_dy") > 0,
           expr("(_num * 10000 div _dx) * _num div _dy")))

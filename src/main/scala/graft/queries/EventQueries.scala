@@ -568,9 +568,9 @@ object EventQueries extends QueryGroup {
     ),
 
     // Per-type volume trend line: daily counts → closed-form OLS on
-    // exact BIGINT sums (slope/intercept in micro-units, r² in basis
-    // points, divide-early so nothing squares out of BIGINT). One
-    // aggregation per series; both engines replay the divisions
+    // exact 128-bit sums (DECIMAL(38,0) in Spark, HUGEINT in DuckDB;
+    // slope/intercept in micro-units, r² in basis points, BIGINT out).
+    // One aggregation per series; both engines replay the divisions
     // bit-for-bit.
     "q_events_trend" -> QueryDef(
       (s, d) => {
@@ -586,25 +586,26 @@ object EventQueries extends QueryGroup {
              |    CAST(count(*) AS BIGINT) AS y
              |  FROM events GROUP BY 1, 2),
              |a AS (
-             |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-             |    CAST(sum(x) AS BIGINT) AS sx,
-             |    CAST(sum(y) AS BIGINT) AS sy,
-             |    CAST(sum(x * y) AS BIGINT) AS sxy,
-             |    CAST(sum(x * x) AS BIGINT) AS sxx,
-             |    CAST(sum(y * y) AS BIGINT) AS syy
+             |  SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
+             |    sum(CAST(x AS HUGEINT)) AS sx,
+             |    sum(CAST(y AS HUGEINT)) AS sy,
+             |    sum(CAST(x AS HUGEINT) * y) AS sxy,
+             |    sum(CAST(x AS HUGEINT) * x) AS sxx,
+             |    sum(CAST(y AS HUGEINT) * y) AS syy
              |  FROM daily GROUP BY 1),
              |b AS (
              |  SELECT event_type, n, n * sxy - sx * sy AS num,
              |    n * sxx - sx * sx AS dx, n * syy - sy * sy AS dy,
              |    sx, sy
              |  FROM a)
-             |SELECT event_type, n,
-             |  CASE WHEN dx > 0 THEN num * 1000000 // dx END AS slope_micro,
-             |  CASE WHEN dx > 0
+             |SELECT event_type, CAST(n AS BIGINT) AS n,
+             |  CAST(CASE WHEN dx > 0 THEN num * 1000000 // dx END AS BIGINT)
+             |    AS slope_micro,
+             |  CAST(CASE WHEN dx > 0
              |       THEN (sy * 1000000 - (num * 1000000 // dx) * sx) // n
-             |       END AS intercept_micro,
-             |  CASE WHEN dx > 0 AND dy > 0
-             |       THEN (num * 10000 // dx) * num // dy END AS r2_bp
+             |       END AS BIGINT) AS intercept_micro,
+             |  CAST(CASE WHEN dx > 0 AND dy > 0
+             |       THEN (num * 10000 // dx) * num // dy END AS BIGINT) AS r2_bp
              |FROM b ORDER BY event_type""".stripMargin)
     ),
 

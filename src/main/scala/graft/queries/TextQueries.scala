@@ -201,25 +201,26 @@ object TextQueries extends QueryGroup {
              |  JOIN lgz lr ON lr.x = ranked.r
              |  JOIN lgz lf ON lf.x = ranked.f),
              |a AS (
-             |  SELECT grp, CAST(count(*) AS BIGINT) AS n,
-             |    CAST(sum(x) AS BIGINT) AS sx,
-             |    CAST(sum(y) AS BIGINT) AS sy,
-             |    CAST(sum(x * y) AS BIGINT) AS sxy,
-             |    CAST(sum(x * x) AS BIGINT) AS sxx,
-             |    CAST(sum(y * y) AS BIGINT) AS syy
+             |  SELECT grp, CAST(count(*) AS HUGEINT) AS n,
+             |    sum(CAST(x AS HUGEINT)) AS sx,
+             |    sum(CAST(y AS HUGEINT)) AS sy,
+             |    sum(CAST(x AS HUGEINT) * y) AS sxy,
+             |    sum(CAST(x AS HUGEINT) * x) AS sxx,
+             |    sum(CAST(y AS HUGEINT) * y) AS syy
              |  FROM xy GROUP BY 1),
              |b AS (
              |  SELECT grp, n, n * sxy - sx * sy AS num,
              |    n * sxx - sx * sx AS dx, n * syy - sy * sy AS dy,
              |    sx, sy
              |  FROM a)
-             |SELECT grp AS lang, n AS n_vocab,
-             |  CASE WHEN dx > 0 THEN num * 1000000 // dx END AS slope_micro,
-             |  CASE WHEN dx > 0
+             |SELECT grp AS lang, CAST(n AS BIGINT) AS n_vocab,
+             |  CAST(CASE WHEN dx > 0 THEN num * 1000000 // dx END AS BIGINT)
+             |    AS slope_micro,
+             |  CAST(CASE WHEN dx > 0
              |       THEN (sy * 1000000 - (num * 1000000 // dx) * sx) // n
-             |       END AS intercept_micro,
-             |  CASE WHEN dx > 0 AND dy > 0
-             |       THEN (num * 10000 // dx) * num // dy END AS r2_bp
+             |       END AS BIGINT) AS intercept_micro,
+             |  CAST(CASE WHEN dx > 0 AND dy > 0
+             |       THEN (num * 10000 // dx) * num // dy END AS BIGINT) AS r2_bp
              |FROM b ORDER BY lang""".stripMargin)
     ),
 

@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * files (the judge reads plan claims against these, not a live Spark).
   *
   * Usage: `runMain graft.tools.PlanDump <tag> <suffix> [query ...]`
-  * (no query names = every registered query). The plan is the ANALYZED+
+  * (no query names = every registered query; an unknown name exits 2
+  * before anything runs). The plan is the ANALYZED+
   * optimized physical plan BEFORE execution (AQE `isFinalPlan=false`) —
   * deterministic, independent of machine load, and exactly what
   * `df.explain("formatted")` prints.
@@ -19,6 +20,12 @@ object PlanDump {
     val (tag, suffix, only) = args.toList match {
       case t :: s :: rest => (t, s, rest.toSet)
       case _ => sys.error("usage: PlanDump <tag> <suffix> [query ...]")
+    }
+    val unknown = graft.Bench.unknownQueries(only)
+    if (unknown.nonEmpty) {
+      System.err.println(
+        s"[plandump] unknown query name(s): ${unknown.mkString(", ")}")
+      sys.exit(2)
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

@@ -18,10 +18,9 @@ import graft.SparkTestBase
   *  - [[Dedup.prefixFilterJaccard]] advertises COMPLETE recall at the
   *    threshold (the pigeonhole prefix bound) — checked against
   *    all-pairs exact Jaccard, bit-for-bit on the integer basis points.
-  *  - [[Dedup.minhashLsh]]'s two hash families (portable md5 vs
-  *    production xxhash64) must both pair every EXACT duplicate:
-  *    identical shingle sets collide in every band in any family, so a
-  *    missed exact pair can only be a banding-plumbing bug.
+  *  - [[Dedup.minhashLsh]] must pair every EXACT duplicate: identical
+  *    shingle sets collide in every band, so a missed exact pair can
+  *    only be a banding-plumbing bug.
   */
 class DedupPropertySpec extends AnyFunSuite with SparkTestBase {
 
@@ -124,8 +123,7 @@ class DedupPropertySpec extends AnyFunSuite with SparkTestBase {
     assert(want.nonEmpty, "degenerate fixture: no qualifying pairs")
   }
 
-  test("minhashLsh pairs every planted EXACT duplicate in both hash " +
-      "families (md5-portable and xxhash64)") {
+  test("minhashLsh pairs every planted EXACT duplicate") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     // diverse vocab ⇒ near-zero background similarity; each base doc
@@ -136,12 +134,10 @@ class DedupPropertySpec extends AnyFunSuite with SparkTestBase {
     val corpus = (base ++ base.map { case (id, s) => (id + 5000L, s) })
       .toDF("doc_id", "text")
     val wantPairs = base.map { case (id, _) => (id, id + 5000L) }.toSet
-    Seq(true, false).foreach { fam =>
-      val got = Dedup.minhashLsh(corpus, portable = fam)
-        .filter(col("jaccard") >= 1.0)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(wantPairs.subsetOf(got),
-        s"portable=$fam missed exact pairs ${wantPairs.diff(got).take(5)}")
-    }
+    val got = Dedup.minhashLsh(corpus)
+      .filter(col("jaccard") >= 1.0)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(wantPairs.subsetOf(got),
+      s"missed exact pairs ${wantPairs.diff(got).take(5)}")
   }
 }

@@ -115,6 +115,43 @@ class TimeSeriesSpec extends AnyFunSuite with SparkTestBase {
     assert(out("flat")._2.isEmpty && out("flat")._4.isEmpty)
   }
 
+  test("trend: a ≥10k-word zipfFit matches a driver-side BigInt OLS " +
+      "past the BIGINT range") {
+    import spark.implicits._
+    // one language, 11,000 distinct words, freq(w_i) = max(1, 3000/(i+1))
+    val vocab = 11000
+    val freqs = (0 until vocab).map(i => f"w$i%05d" -> (3000 / (i + 1)).max(1))
+    val tokens = freqs.flatMap { case (w, f) => Seq.fill(f)(w) }
+    val docs = tokens.grouped(500).zipWithIndex
+      .map { case (ws, i) => (i.toLong, "xx", ws.mkString(" ")) }.toSeq
+      .toDF("doc_id", "lang", "text")
+    val got = TextAnalysis.zipfFit(docs).collect()
+      .map(r => (r.getString(0), r.getLong(1),
+        Option(r.get(2)).map(_.asInstanceOf[Long]),
+        Option(r.get(3)).map(_.asInstanceOf[Long]),
+        Option(r.get(4)).map(_.asInstanceOf[Long])))
+    // driver-side reference: rank by (freq desc, word), both axes on
+    // the same pseudo-log2, OLS in arbitrary precision (BigInt `/`
+    // truncates toward zero, as `div` does)
+    val pts = freqs.sortBy { case (w, f) => (-f, w) }.zipWithIndex
+      .map { case ((_, f), r) =>
+        (BigInt(TextAnalysis.pseudoLog2Long(r + 1L)),
+          BigInt(TextAnalysis.pseudoLog2Long(f.toLong))) }
+    val n = BigInt(pts.size)
+    val (sx, sy) = (pts.map(_._1).sum, pts.map(_._2).sum)
+    val sxy = pts.map(p => p._1 * p._2).sum
+    val sxx = pts.map(p => p._1 * p._1).sum
+    val syy = pts.map(p => p._2 * p._2).sum
+    val (num, dx, dy) = (n * sxy - sx * sy, n * sxx - sx * sx, n * syy - sy * sy)
+    assert(n * sxx > BigInt(Long.MaxValue),
+      "fixture must leave the BIGINT range the old sums overflowed")
+    val slope = num * 1000000 / dx
+    val want = ("xx", vocab.toLong, Some(slope.toLong),
+      Some(((sy * 1000000 - slope * sx) / n).toLong),
+      Some((num * 10000 / dx * num / dy).toLong))
+    assert(got.toSeq == Seq(want))
+  }
+
   test("timingRegularity: metronome flags, bursty stream does not, gaps " +
     "clamp, zero-mean reports NULL cv2") {
     import spark.implicits._
